@@ -39,7 +39,7 @@ class EngineConfig:
     # Auto doc-range fan-out: when the largest per-query candidate volume
     # (sum of df over the query's distinct terms, from term_stats) exceeds
     # this many postings, search_df shards scoring by doc-id range so one
-    # head-term query never lands on a single applyInPandas task. None
+    # head-term query never lands on a single scoring task. None
     # disables the heuristic (explicit fan_out= always wins). The default is
     # sized so a task decodes at most ~2M postings (~tens of MB, well inside
     # executor memory); at 10^12 docs a head-term query auto-shards

@@ -68,7 +68,7 @@ from pyspark.storagelevel import StorageLevel
 
 from similarities_spark.config import EngineConfig
 from similarities_spark.index import codec
-from similarities_spark.localdf import literal_df
+from similarities_spark.localdf import DRIVER_ROWS_MAX, literal_df
 from similarities_spark.plans.manifest import completed_buckets, write_manifest
 from similarities_spark.sources.readers import extract_text
 from similarities_spark.tokenize import choose_corpus_tokenizer
@@ -109,14 +109,6 @@ _BLOCKS_READ_SCHEMA = StructType(
 # ~4M rows keep files in the guide §6 output-size band; below that a
 # single sorted file serves the same row-group pruning
 _STATS_ROWS_PER_PARTITION = 4_000_000
-
-# vocab size up to which term_stats finish on the driver (collect the
-# per-term aggregates, compute idf/eps in Python — same math.log the
-# pandas UDF runs — and write one sorted literal file): trades a
-# distributed idf projection + scalar agg + persisted intermediate
-# (3-4 jobs) for one collect of a few-MB table. Above this, the fully
-# distributed path runs unchanged (10^9-term vocabs never collect).
-_DRIVER_STATS_MAX_VOCAB = 20_000
 
 # explicit read schemas everywhere: an all-stopword corpus produces empty
 # blocks/term_stats dirs, where schema inference would fail
@@ -1107,12 +1099,12 @@ class BM25IndexBuilder:
         # deterministic ascending-term Python sum whenever the vocab fits
         # the driver cap, and the identical distributed plan otherwise.
         driver_rows = None
-        if int(idx.meta.get("vocab_size") or 0) <= _DRIVER_STATS_MAX_VOCAB:
+        if int(idx.meta.get("vocab_size") or 0) <= DRIVER_ROWS_MAX:
             driver_rows = sorted(
                 (r["term"], int(r["df"]), int(r["tok_new"]))
                 for r in combined.collect()
             )
-            if len(driver_rows) > _DRIVER_STATS_MAX_VOCAB:
+            if len(driver_rows) > DRIVER_ROWS_MAX:
                 driver_rows = None  # crossed the cap this merge: go distributed
         if driver_rows is not None:
             idf_raw = [
@@ -1574,9 +1566,11 @@ class BM25IndexBuilder:
         # the bucket metrics (when the blocks stage just ran) give the EXACT
         # vocab size up front (buckets partition the vocab by term hash, so
         # sum of per-bucket distinct terms is the global distinct count) —
-        # a small vocab then finishes on the driver in one job
+        # a small vocab then finishes on the driver in one job (one collect
+        # of a few-MB table instead of a distributed idf projection, scalar
+        # agg and persisted intermediate: 3-4 jobs)
         vocab_hint = getattr(self, "_last_vocab_hint", None)
-        if vocab_hint is not None and vocab_hint <= _DRIVER_STATS_MAX_VOCAB:
+        if vocab_hint is not None and vocab_hint <= DRIVER_ROWS_MAX:
             return self._finish_term_stats_driver(df_tbl, n_docs, stats_path)
         return self._finish_term_stats(df_tbl, n_docs, stats_path)
 

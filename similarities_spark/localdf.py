@@ -11,10 +11,12 @@ import math
 from pyspark.sql import SparkSession
 
 
-# Above this many rows a literal VALUES table would bloat SQL parse time;
-# fall back to the RDD-backed createDataFrame (still correct, just not a
-# LocalRelation)
-_MAX_VALUES_ROWS = 20_000
+# The most rows the driver stages in one place: a literal VALUES table
+# (above it SQL parse time bloats; literal_df falls back to the RDD-backed
+# createDataFrame), the builder's driver-side term_stats tail, the query
+# engine's stats snapshot, and the query rows search_df collects (above it
+# the batch runs the fully distributed join path instead).
+DRIVER_ROWS_MAX = 20_000
 
 
 def literal_df(spark: SparkSession, rows, schema_ddl: str):
@@ -39,7 +41,7 @@ def literal_df(spark: SparkSession, rows, schema_ddl: str):
     for part in schema_ddl.split(","):
         name, typ = part.strip().split()
         fields.append((name, typ.lower()))
-    if len(rows) > _MAX_VALUES_ROWS:
+    if len(rows) > DRIVER_ROWS_MAX:
         return spark.createDataFrame(rows, schema_ddl)
     if not rows:
         return spark.createDataFrame([], schema_ddl)

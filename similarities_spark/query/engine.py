@@ -1,64 +1,65 @@
 """Distributed BM25 query engine over the term-partitioned block index.
 
-Physical plan (per query batch):
+Physical plan (per query batch). Every search surface returns a LAZY
+DataFrame: building it submits no Spark job and persists nothing.
 
-  queries -> tokenize UDF (query mode: NO stopword filter, duplicates kept,
-             reference literal_similarity.py:434)
-    -> posexplode tokens                              (order-preserving)
-    -> DISTINCT (query_id, term) COLLECTED driver-side [O(queries x qlen),
-       tiny by contract] -> terms, buckets = pmod(xxhash64(term), B), and
-       per-term df/idf looked up from term_stats
-    blocks scan: filter bucket IN (query-term buckets)  -> parquet PARTITION
-                 pruning (bucket is the partition column), AND term IN
-                 (query terms) -> row-group min/max stats pruning (blocks
-                 are written sorted by term within each bucket)
-    -> cogroup(query tokens, matched blocks) BY query_id [, range_id]
-       -> applyInPandas: block-max MaxScore kernel (scorer.py)
-    -> per-query top-k already ranked; zero-score padding stage only for
-       queries the scorer flagged (degenerate small-corpus semantics,
-       reference literal_similarity.py:437-440)
+  row producers — candidate block rows annotated with (query_id, term, df,
+  idf), plus one marker row (term null) per (query, range):
+    search / search_df: queries tokenize in driver Python (query mode: NO
+      stopword filter, duplicates kept, reference literal_similarity.py:434)
+      -> distinct terms, buckets = pmod(xxhash64(term), B), df/idf from the
+      stats snapshot. Blocks scan: bucket IN (...) -> parquet PARTITION
+      pruning (bucket is the partition column), term IN (...) -> row-group
+      min/max pruning (blocks are sorted by term within each bucket); a
+      broadcast join with the literal (query_id, term, df, idf) table.
+      Ordered query tokens ride in the scorer closure.
+    search_join_df: the tokenizer UDF's token array rides on the marker
+      rows; query terms reach term_stats and blocks through distributed
+      joins, so no query row is staged on the driver.
+
+  one scoring tail (_score_tail):
+    block rows UNION marker rows
+    -> repartition by query_id [, range_id], sort within partitions
+    -> mapInArrow: per (query, range) run, the block-max MaxScore kernel
+       (scorer.py), zero-score padding with the lowest unmatched doc ids
+       (degenerate small-corpus semantics, reference
+       literal_similarity.py:437-440) and ranking, in place
+       -> (query_id, rank, doc_id, score)
+    -> doc-range fan-out only: one row_number window merges the per-range
+       top-k lists
     -> optional join docs for corpus text
 
 Only index partitions/row-groups holding query terms are ever READ, and only
-matching blocks are shuffled; the big index never moves otherwise. The
-scorer task for one query holds that query's candidate blocks; for fat
-(head-term) queries, scoring auto-shards by doc-id range when the estimated
-candidate volume (sum of df over query terms) exceeds
-``cfg.fan_out_threshold`` — bit-identical results, R-way parallel per query
-(``fan_out=`` forces a specific R).
+matching blocks are shuffled; the big index never moves otherwise. One
+scoring task holds a query's candidate blocks; for fat (head-term) queries,
+scoring auto-shards by doc-id range when the estimated candidate volume (sum
+of df over query terms) exceeds ``cfg.fan_out_threshold`` — bit-identical
+results, R-way parallel per query (``fan_out=`` forces a specific R).
 """
 
 from __future__ import annotations
 
+import json
+import os
 from typing import Dict, Optional, Sequence, Union
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from similarities_spark.index.build import BM25Index
-from similarities_spark.localdf import literal_df as _literal_df
+from similarities_spark.localdf import DRIVER_ROWS_MAX, literal_df as _literal_df
 from similarities_spark.query import scorer as _scorer
 from similarities_spark.tokenize import make_tokenizer_udf, tokenize_text
 from similarities_spark.xxh64 import term_bucket
 
-_SCORE_SCHEMA = StructType(
-    [
-        StructField("query_id", LongType()),
-        StructField("range_id", LongType()),
-        StructField("doc_id", LongType()),
-        StructField("score", DoubleType()),
-        StructField("n_matched", LongType()),
-        StructField("needs_pad", BooleanType()),
-        StructField("pad_score", DoubleType()),
-    ]
+_HITS_DDL = "query_id long, rank int, doc_id long, score double"
+
+# block-side columns the scorer reads (plus query_id / range_id keys)
+_BLOCK_COLS = (
+    "term", "salt", "block_id", "min_doc", "max_doc", "n_postings",
+    "tf_max", "tf_min", "dl_max", "dl_min", "payload", "df", "idf",
 )
 
 
@@ -66,11 +67,9 @@ def _measure_scorer_rate(cfg, avgdl: float) -> float:
     """Decode+score throughput (postings/sec) of the MaxScore kernel on
     synthetic single-term blocks — the driver-side microbench behind
     ``fan_out_target_task_s``. Runs in ~100 ms once per engine; the same
-    numpy kernel executes inside every applyInPandas scoring task, so the
-    measured rate transfers to executor tasks directly."""
+    numpy kernel executes inside every scoring task, so the measured rate
+    transfers to executor tasks directly."""
     import time as _time
-
-    import numpy as np
 
     from similarities_spark.index import codec as _codec
 
@@ -88,13 +87,7 @@ def _measure_scorer_rate(cfg, avgdl: float) -> float:
         )
         for bi, (payload, lo, hi) in enumerate(blocks)
     ]
-    pdf = pd.DataFrame(
-        rows,
-        columns=[
-            "term", "salt", "block_id", "min_doc", "max_doc", "n_postings",
-            "tf_max", "tf_min", "dl_max", "dl_min", "payload", "df", "idf",
-        ],
-    )
+    pdf = pd.DataFrame(rows, columns=list(_BLOCK_COLS))
     best = float("inf")
     for _ in range(2):  # second run is warm (numpy/codec JIT-free, cache-hot)
         t0 = _time.perf_counter()
@@ -107,44 +100,171 @@ def _measure_scorer_rate(cfg, avgdl: float) -> float:
     return n / best
 
 
+def _sql_in(col: str, values) -> str:
+    """``col IN (v, ...)`` as SQL text: one parse on the JVM instead of one
+    py4j literal per value (``Column.isin``). Strings are quoted with the
+    parser's backslash escapes, so any token (quotes, backslashes) round-trips
+    exactly; the optimizer still pushes the list into the parquet scan."""
+    def lit(v):
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return str(int(v))
+
+    return f"{col} IN ({', '.join(lit(v) for v in values)})"
+
+
+def _meta_state(meta: dict):
+    """The parts of meta.json a merge, compaction or rebuild changes."""
+    return (meta.get("n_docs"), meta.get("increments"), meta.get("lineage_key"))
+
+
+def _scoring_kernel(
+    *,
+    k: int,
+    n_docs: int,
+    avgdl: float,
+    cfg,
+    per: Optional[int],
+    tokens_by_q: Optional[Dict[int, list]],
+    token_dfs_by_q: Dict[int, dict],
+):
+    """-> the mapInArrow function of the scoring tail.
+
+    Input batches arrive sorted by (query_id, range_id); each run of one
+    key holds that (query, range)'s candidate block rows plus its marker
+    row(s) (term null). Per run it scores with the MaxScore kernel, then —
+    when the scorer flags that unmatched docs are rankable — merges in the
+    lowest doc ids of the range that matched nothing, at ``pad_score``
+    (doc ids are dense 0..N-1 by construction), ranks by (score desc,
+    doc_id asc) and keeps the top k. Query tokens come from
+    ``tokens_by_q`` when given, else from the marker row's ``tokens`` (and
+    BM25Plus ``token_dfs``) columns. A run never needs rows of another, so
+    memory is one run plus one Arrow batch."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    prune = cfg.score_mode == "wand"
+    variant, delta, k1, b = cfg.variant, cfg.resolved_delta(), cfg.k1, cfg.b
+    out_schema = pa.schema(
+        [("query_id", pa.int64()), ("rank", pa.int32()),
+         ("doc_id", pa.int64()), ("score", pa.float64())]
+    )
+
+    def score_run(run: pa.Table):
+        qid = run.column("query_id")[0].as_py()
+        rid = run.column("range_id")[0].as_py()
+        is_block = pc.is_valid(run.column("term"))
+        blocks = run.filter(is_block)
+        # a marker-only run (no candidate block in this query or range)
+        # skips the pandas conversion: the scorer pads it from tokens alone
+        blocks = blocks.to_pandas() if blocks.num_rows else None
+        if tokens_by_q is not None:
+            tokens = tokens_by_q.get(qid, [])
+            token_dfs = token_dfs_by_q.get(qid)
+        else:
+            marker = run.filter(pc.invert(is_block)).slice(0, 1).to_pylist()[0]
+            tokens = list(marker["tokens"] or [])
+            token_dfs = dict(marker.get("token_dfs") or [])
+        lo, hi = (rid * per, min(n_docs, (rid + 1) * per)) if per else (0, n_docs)
+        ids, scores, _, needs_pad, pad_score = _scorer.score_query(
+            tokens, blocks, k, avgdl, k1, b, prune=prune,
+            variant=variant, delta=delta, n_docs=n_docs,
+            doc_range=(lo, hi) if per else None, token_dfs=token_dfs or None,
+        )
+        if needs_pad:
+            # a padded run holds ALL its matched docs, so the k lowest
+            # unmatched ids lie in [lo, lo + k + matched)
+            pool = np.arange(lo, min(hi, lo + k + ids.size), dtype=np.int64)
+            pool = pool[~np.isin(pool, ids)][:k]
+            ids = np.concatenate([ids, pool])
+            scores = np.concatenate([scores, np.full(pool.size, pad_score)])
+            top = np.lexsort((ids, -scores))[:k]
+            ids, scores = ids[top], scores[top]
+        return qid, ids, scores
+
+    def hits_batch(results) -> pa.RecordBatch:
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.concatenate(
+                    [np.full(ids.size, q, np.int64) for q, ids, _ in results])),
+                pa.array(np.concatenate(
+                    [np.arange(1, ids.size + 1, dtype=np.int32)
+                     for _, ids, _ in results])),
+                pa.array(np.concatenate([ids for _, ids, _ in results])),
+                pa.array(np.concatenate([s for _, _, s in results])),
+            ],
+            schema=out_schema,
+        )
+
+    def kernel(batches):
+        pieces, key = [], None  # the open run, possibly spanning batches
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            q = batch.column("query_id").to_numpy()
+            r = batch.column("range_id").to_numpy()
+            cuts = np.flatnonzero((q[1:] != q[:-1]) | (r[1:] != r[:-1])) + 1
+            done = []
+            for s, e in zip([0, *cuts], [*cuts, batch.num_rows]):
+                if pieces and (q[s], r[s]) != key:
+                    done.append(score_run(pa.Table.from_batches(pieces)))
+                    pieces = []
+                key = (q[s], r[s])
+                pieces.append(batch.slice(s, e - s))
+            if done:
+                yield hits_batch(done)
+        if pieces:
+            yield hits_batch([score_run(pa.Table.from_batches(pieces))])
+
+    return kernel
+
+
 class BM25QueryEngine:
     def __init__(self, index: BM25Index, cfg=None):
         """``cfg`` overrides the index's stored config for query-time-only
         knobs (score_mode, fan_out_*, variant); index-layout fields must
         match what was built."""
-        self.index = index
-        self.spark = index.spark
-        self.cfg = cfg if cfg is not None else index.config()
+        self._cfg_override = cfg
         self.last_fan_out: Optional[int] = None
         # populated on first use when fan_out_target_task_s is set
         self.last_calibration: Optional[dict] = None
+        self._bind(index)
+
+    def _bind(self, index: BM25Index) -> None:
+        """Bind DataFrame HANDLES (not data) to the index tables:
+        spark.read.parquet lists files eagerly on the driver, so a fresh
+        blocks()/term_stats() per batch would re-pay the listing every
+        search."""
+        self.index = index
+        self.spark = index.spark
+        self.cfg = (
+            self._cfg_override
+            if self._cfg_override is not None
+            else index.config()
+        )
         self._resolved_fan_out_threshold: Optional[int] = None
-        # DataFrame HANDLES (not data) to the index tables, created once:
-        # spark.read.parquet lists files eagerly on the driver, so a fresh
-        # blocks()/term_stats() per batch re-paid the listing every search.
-        # The engine binds to the index state at construction — consistent
-        # with BM25Index.meta, which is read once at open.
         self._blocks_df = index.blocks()
         self._stats_df = index.term_stats()
         # vocab-capped driver snapshot of term_stats, loaded lazily at the
         # first search: the per-batch df/idf lookup then costs a dict probe
-        # instead of a Spark job. Gated on the EXACT vocab size from meta
-        # (same 20k cap as the builder's driver stats tail) — a web-scale
-        # vocab never loads; values come from the same parquet bytes, so
-        # scores are unchanged.
+        # instead of a Spark job. Gated on the EXACT vocab size from meta —
+        # a web-scale vocab never loads; values come from the same parquet
+        # bytes, so scores are unchanged.
         self._stats_snapshot: Optional[dict] = None
-        # the cached DFs of the CURRENT search (scored + the pad summary):
-        # kept alive while the caller materializes the returned hits,
-        # released on the NEXT search (or close()) — a long-lived session
-        # issuing thousands of batches must not accumulate block-manager
-        # entries until LRU churn
-        self._live_cached: list = []
+
+    def _refresh(self) -> None:
+        """Rebind when merge_new_docs, compact or a rebuild committed to the
+        index directory since binding — one meta.json read, no Spark job —
+        so a long-lived engine never serves stale index state."""
+        path = os.path.join(self.index.index_dir, "meta.json")
+        with open(path, "r", encoding="utf-8") as f:
+            on_disk = json.load(f)
+        if _meta_state(on_disk) != _meta_state(self.index.meta):
+            self._bind(BM25Index(self.spark, self.index.index_dir))
 
     def close(self) -> None:
-        """Release the engine's cached intermediates (idempotent)."""
-        for df in self._live_cached:
-            df.unpersist()
-        self._live_cached = []
+        """Release the engine's cached intermediates. Searches cache
+        nothing, so this is a no-op kept for callers that close engines."""
 
     def fan_out_threshold(self) -> Optional[int]:
         """Effective auto-fan-out threshold: the configured posting count,
@@ -176,9 +296,8 @@ class BM25QueryEngine:
         """df/idf for the given terms: from the vocab-capped driver
         snapshot when the whole stats table is tiny (one load per engine,
         then zero Spark jobs per batch), else a term-IN-pruned scan."""
-        cap = 20_000
-        vocab = int(self.index.meta.get("vocab_size") or (cap + 1))
-        if vocab <= cap:
+        vocab = int(self.index.meta.get("vocab_size") or (DRIVER_ROWS_MAX + 1))
+        if vocab <= DRIVER_ROWS_MAX:
             if self._stats_snapshot is None:
                 self._stats_snapshot = {
                     r["term"]: (int(r["df"]), float(r["idf"]))
@@ -191,7 +310,7 @@ class BM25QueryEngine:
             }
         return {
             r["term"]: (int(r["df"]), float(r["idf"]))
-            for r in self._stats_df.filter(F.col("term").isin(terms)).collect()
+            for r in self._stats_df.filter(F.expr(_sql_in("term", terms))).collect()
         }
 
     def search(
@@ -228,25 +347,31 @@ class BM25QueryEngine:
     ) -> DataFrame:
         """``fan_out=R`` splits scoring into R doc-id range shards per query:
         each (query, range) task scores its shard fully (still bit-exact per
-        doc — ranges partition the doc space) and emits a local top-k; a
-        global window merges. This is the single-query-latency path at
-        extreme scale — one query's work spreads over R tasks instead of
+        doc — ranges partition the doc space) and emits a padded local
+        top-k; a global window merges. This is the single-query-latency path
+        at extreme scale — one query's work spreads over R tasks instead of
         one. When ``fan_out`` is None it auto-enables once the estimated
         candidate volume of the fattest query exceeds
         ``cfg.fan_out_threshold`` postings. All variants decompose over doc
         ranges: Okapi/BM25L because their unmatched-doc contribution is
         exactly 0; BM25Plus because its per-token idf*delta baseline is a
-        query constant every range task reproduces from the token-side df
-        column (scorer token_dfs), independent of which blocks it sees.
+        query constant every range task reproduces from the token dfs,
+        independent of which blocks it sees.
 
-        The raw (query_id, text) rows are collected ONCE (the only
-        DataFrame action on queries; they are driver-adjacent by contract)
-        and tokenized in driver Python with the very function the query
-        UDF wraps (tokenize_text, mode='query' — bit-identical tokens) —
-        no Python-UDF tokenize job + explode + distinct shuffle per batch."""
-        qrows = queries_df.select(
-            F.col("query_id").cast("long").alias("query_id"), "text"
-        ).collect()
+        The raw (query_id, text) rows are collected ONCE, bounded at
+        ``DRIVER_ROWS_MAX`` + 1 rows, and tokenized in driver Python with
+        the very function the query UDF wraps (tokenize_text, mode='query'
+        — bit-identical tokens). A batch over the bound runs the
+        search_join_df row producer instead — same tail, same results."""
+        qrows = (
+            queries_df.select(
+                F.col("query_id").cast("long").alias("query_id"), "text"
+            )
+            .limit(DRIVER_ROWS_MAX + 1)
+            .collect()
+        )
+        if len(qrows) > DRIVER_ROWS_MAX:
+            return self._search_join(queries_df, topn, include_text, fan_out)
         tok_lists = [
             (int(r["query_id"]), tokenize_text(r["text"], mode="query"))
             for r in qrows
@@ -262,57 +387,34 @@ class BM25QueryEngine:
         include_text: bool,
         fan_out: Optional[int],
     ) -> DataFrame:
-        """Driver-adjacent scoring over pre-tokenized (query_id, tokens)
-        pairs. Everything query-sized becomes a JVM LocalRelation
-        (_literal_df): the token side of the cogroup, the broadcast df/idf
-        stats side, and the padding id set — so the only Python stage in
-        the whole physical plan is the MaxScore scorer kernel itself.
-        Yields the partition/row-group pruning predicates for the blocks
-        scan and the candidate-volume estimate for auto fan-out."""
+        """Row producer of the driver surfaces over pre-tokenized
+        (query_id, tokens) pairs. Everything query-sized becomes a JVM
+        LocalRelation (_literal_df) — the broadcast df/idf stats side and
+        the marker rows — so the only Python stage in the physical plan is
+        the scoring kernel itself. Yields the partition/row-group pruning
+        predicates for the blocks scan and the candidate-volume estimate
+        for auto fan-out."""
+        self._refresh()
         cfg = self.cfg
-        variant = cfg.variant
-        topn = int(topn)
         qt_pairs = sorted({(q, t) for q, toks in tok_lists for t in toks})
         terms = sorted({t for _, t in qt_pairs})
-        if terms:
-            # bucket of each term via pure-Python xxHash64 — bit-identical
-            # to the JVM xxhash64 the index writer used (fuzz-gated parity,
-            # tests/test_r3_fixes.py) and one fewer Spark job per batch
-            # than hashing through a createDataFrame round-trip
-            buckets = sorted(
-                {term_bucket(t, cfg.num_term_buckets) for t in terms}
-            )
-            stat_map = self._lookup_stats(terms)
-        else:
-            buckets, stat_map = [], {}
+        stat_map = self._lookup_stats(terms) if terms else {}
 
         # partition pruning (bucket IN ...) + row-group stats pruning
         # (term IN ...): only index files/row-groups holding query terms
-        # are read — the rest of the 100 TB index is never touched
-        blocks = self._blocks_df
-        if buckets:
-            blocks = blocks.filter(F.col("bucket").isin(buckets)).filter(
-                F.col("term").isin(terms)
+        # are read. Buckets come from pure-Python xxHash64, bit-identical
+        # to the JVM xxhash64 the index writer used (fuzz-gated parity,
+        # tests/test_r3_fixes.py).
+        if terms:
+            buckets = sorted({term_bucket(t, cfg.num_term_buckets) for t in terms})
+            blocks = self._blocks_df.filter(
+                F.expr(f"{_sql_in('bucket', buckets)} AND {_sql_in('term', terms)}")
             )
         else:
-            blocks = blocks.filter(F.lit(False))
-        blocks = blocks.select(
-            "term",
-            "salt",
-            "block_id",
-            "min_doc",
-            "max_doc",
-            "n_postings",
-            "tf_max",
-            "tf_min",
-            "dl_max",
-            "dl_min",
-            "payload",
-        )
+            blocks = self._blocks_df.filter(F.lit(False))
         # blocks are stats-free (immutable segments); per-term df/idf ride
-        # in on the tiny broadcast query side, built driver-side from the
-        # stats lookup above (terms absent from the index carry no blocks,
-        # so they are skipped here — the inner join would drop them anyway)
+        # in on the tiny broadcast query side (terms absent from the index
+        # carry no blocks, so they are skipped here)
         known = [
             (q, t, stat_map[t][0], stat_map[t][1])
             for q, t in qt_pairs
@@ -321,28 +423,21 @@ class BM25QueryEngine:
         qstats = _literal_df(
             self.spark, known, "query_id long, term string, df long, idf double"
         )
-        qblocks = F.broadcast(qstats).join(blocks, "term", "inner")
+        rows = F.broadcast(qstats).join(blocks, "term", "inner")
+
         # Query tokens (ordered, duplicates kept) and BM25Plus token dfs
-        # ship in the scorer-function CLOSURE instead of riding a token-side
-        # DataFrame through a cogroup: the queries are driver-adjacent by
-        # contract, so a per-stage pickled dict replaces an entire exchange
-        # (the old qtok shuffle) and halves the scoring job's stage count.
-        # Padding stays correct for queries with no matching blocks: they
-        # simply produce no group, and _pad_and_rank's left join pads
-        # absent queries at score 0.0 — exact, because a query with ANY
-        # in-index token always has matching block rows (stats row => blocks
-        # exist), so an absent query has no in-index tokens and its true
-        # pad score is 0.0 for every variant.
+        # ship in the scorer-function CLOSURE: the queries are
+        # driver-adjacent by contract, so a pickled dict replaces a token
+        # side DataFrame and its exchange.
         tokens_by_q: Dict[int, list] = {}
         for q, toks in tok_lists:
             tokens_by_q.setdefault(q, []).extend(toks)
-        if variant == "bm25plus":
+        token_dfs_by_q = {}
+        if cfg.variant == "bm25plus":
             token_dfs_by_q = {
                 q: {t: stat_map[t][0] for t in set(toks) if t in stat_map}
                 for q, toks in tokens_by_q.items()
             }
-        else:
-            token_dfs_by_q = {}
 
         fan_thr = self.fan_out_threshold()
         if fan_out is None and fan_thr:
@@ -350,108 +445,18 @@ class BM25QueryEngine:
             # as sum(df) over its in-index terms (exact upper bound on the
             # postings one scorer task would decode)
             per_q: Dict[int, int] = {}
-            for q, t, df_, _ in known:
+            for q, _, df_, _ in known:
                 per_q[q] = per_q.get(q, 0) + df_
             max_cand = max(per_q.values(), default=0)
             if max_cand > fan_thr:
                 fan_out = min(cfg.fan_out_max, -(-max_cand // fan_thr))
-        # observability (and test hook): the fan-out actually used
-        self.last_fan_out = fan_out
-        # the padding stage only needs the DISTINCT query ids — a literal
-        # int table, not the queries DataFrame
-        qids_df = _literal_df(
-            self.spark,
-            [(q,) for q in sorted(tokens_by_q)],
-            "query_id long",
+        markers = _literal_df(
+            self.spark, [(q,) for q in sorted(tokens_by_q)], "query_id long"
         )
-        return self._finish_search_local(
-            tokens_by_q,
-            token_dfs_by_q,
-            qblocks,
-            qids_df,
-            topn,
-            fan_out,
-            include_text,
+        return self._score_tail(
+            rows, markers, topn, fan_out, include_text,
+            tokens_by_q=tokens_by_q, token_dfs_by_q=token_dfs_by_q,
         )
-
-    def _finish_search_local(
-        self,
-        tokens_by_q: Dict[int, list],
-        token_dfs_by_q: Dict[int, dict],
-        qblocks: DataFrame,
-        qids_df: DataFrame,
-        topn: int,
-        fan_out: Optional[int],
-        include_text: bool,
-    ) -> DataFrame:
-        """Scoring tail for the driver-adjacent path: ONE grouped-map over
-        the matched block rows per (query [, range]); query tokens arrive
-        via closure. Fan-out explodes blocks into their doc-id ranges as
-        before — a (query, range) with no blocks yields no group, which the
-        padding summary treats exactly like an all-blocks-out-of-range
-        scorer call (needs_pad=True vote, same pad score), so results are
-        unchanged (parity-tested)."""
-        cfg = self.cfg
-        avgdl = self.index.avgdl
-        n_docs = self.index.n_docs
-        k1, b, k = cfg.k1, cfg.b, topn
-        prune = cfg.score_mode == "wand"
-        variant, delta = cfg.variant, cfg.resolved_delta()
-
-        if fan_out:
-            per = max(1, (n_docs + fan_out - 1) // fan_out)
-            qblocks = qblocks.withColumn(
-                "range_id",
-                F.explode(
-                    F.sequence(
-                        (F.col("min_doc") / per).cast("long"),
-                        (F.col("max_doc") / per).cast("long"),
-                    )
-                ),
-            )
-            keys = ["query_id", "range_id"]
-        else:
-            per = None
-            qblocks = qblocks.withColumn("range_id", F.lit(0).cast("long"))
-            keys = ["query_id"]
-
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = int(pdf["query_id"].iloc[0])
-            rid = int(pdf["range_id"].iloc[0])
-            doc_range = (rid * per, (rid + 1) * per) if per else None
-            tokens = tokens_by_q.get(qid, [])
-            token_dfs = token_dfs_by_q.get(qid)
-            ids, scores, n_matched, needs_pad, pad_score = _scorer.score_query(
-                tokens, pdf, k, avgdl, k1, b, prune=prune,
-                variant=variant, delta=delta, n_docs=n_docs,
-                doc_range=doc_range, token_dfs=token_dfs or None,
-            )
-            return pd.DataFrame(
-                {
-                    "query_id": qid,
-                    "range_id": rid,
-                    "doc_id": ids,
-                    "score": scores,
-                    "n_matched": n_matched,
-                    "needs_pad": needs_pad,
-                    "pad_score": pad_score,
-                }
-            )
-
-        scored = qblocks.groupBy(*keys).applyInPandas(
-            score_group, _SCORE_SCHEMA
-        )
-        hits = self._pad_and_rank(
-            qids_df, scored, k, single_range=not fan_out
-        )
-        if include_text:
-            docs = self.index.docs().select(
-                "doc_id", F.col("text").alias("corpus_doc")
-            )
-            hits = hits.join(docs, "doc_id", "left").select(
-                "query_id", "rank", "doc_id", "score", "corpus_doc"
-            )
-        return hits
 
     def search_join_df(
         self,
@@ -464,42 +469,55 @@ class BM25QueryEngine:
 
         ``search_df``'s contract is "queries are driver-adjacent": it
         collects the distinct query terms once to build literal
-        bucket/term pruning predicates and a broadcast stats side — the
-        right physical plan up to ~10^5 queries. This path instead JOINS:
-        query terms x term_stats (distributed hash join on term) and
-        query terms x blocks on (bucket, term), so a million-query batch
-        never stages rows on the driver. Trade-offs, by design:
+        bucket/term pruning predicates and a broadcast stats side. This
+        path instead JOINS: query terms x term_stats (distributed hash join
+        on term) and query terms x blocks on (bucket, term), so a
+        million-query batch never stages rows on the driver. Trade-offs, by
+        design:
         - blocks pruning relies on the join + dynamic/runtime filters
           instead of literal IN predicates (a broad query set would defeat
           literal pruning anyway);
         - auto fan-out sizing needs one SCALAR agg job (max per-query
           candidate volume), not per-query driver rows.
-        Results are identical to search_df (parity-tested)."""
+        Both feed the same scoring tail, so results are identical to
+        search_df (parity-tested)."""
+        return self._search_join(queries_df, topn, include_text, None)
+
+    def _search_join(
+        self,
+        queries_df: DataFrame,
+        topn: int,
+        include_text: bool,
+        fan_out: Optional[int],
+    ) -> DataFrame:
+        """Row producer of search_join_df (and of search_df batches over
+        the driver bound): marker rows carry each query's ordered token
+        array (and, for BM25Plus, its in-index token dfs)."""
+        self._refresh()
         cfg = self.cfg
         tok_udf = make_tokenizer_udf("query")
-        qtok = queries_df.select(
+        markers = queries_df.select(
             F.col("query_id").cast("long").alias("query_id"),
-            F.posexplode(tok_udf(F.col("text"))).alias("pos", "term"),
+            tok_udf(F.col("text")).alias("tokens"),
         )
-        # fresh explode (not qtok.select): the cogroup below holds qtok on
-        # one side and this lineage on the other — sharing qtok's attribute
-        # ids would trip Spark's ambiguous-self-join detection
-        qterms = queries_df.select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.explode(tok_udf(F.col("text"))).alias("term"),
+        qterms = markers.select(
+            "query_id", F.explode("tokens").alias("term")
         ).distinct()
-        qstats = qterms.join(
-            self._stats_df, "term", "inner"
-        ).withColumn(
+        qstats = qterms.join(self._stats_df, "term", "inner").withColumn(
             "bucket",
             F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets)).cast("int"),
         )
-        qblocks = qstats.join(self._blocks_df, ["bucket", "term"], "inner")
-        qtok = self._attach_token_dfs(qtok, qstats, broadcast_stats=False)
+        rows = qstats.join(self._blocks_df, ["bucket", "term"], "inner")
+        if cfg.variant == "bm25plus":
+            token_dfs = qstats.groupBy("query_id").agg(
+                F.map_from_entries(
+                    F.collect_list(F.struct("term", "df"))
+                ).alias("token_dfs")
+            )
+            markers = markers.join(token_dfs, "query_id", "left")
 
-        fan_out = None
         fan_thr = self.fan_out_threshold()
-        if fan_thr:
+        if fan_out is None and fan_thr:
             row = (
                 qstats.groupBy("query_id")
                 .agg(F.sum("df").alias("c"))
@@ -509,240 +527,33 @@ class BM25QueryEngine:
             max_cand = int(row["m"] or 0)
             if max_cand > fan_thr:
                 fan_out = min(cfg.fan_out_max, -(-max_cand // fan_thr))
-        self.last_fan_out = fan_out
-        return self._finish_search(
-            qtok, qblocks, queries_df, topn, fan_out, include_text
-        )
+        return self._score_tail(rows, markers, topn, fan_out, include_text)
 
-    def search_term_centric_df(
+    def _score_tail(
         self,
-        queries_df: DataFrame,
-        topn: int = 10,
-        include_text: bool = False,
-    ) -> DataFrame:
-        """Term-centric batch scoring: decode and score each (term, block)
-        ONCE per batch, regardless of how many queries share the term.
-
-        The cogroup paths (search_df / search_join_df) replicate a term's
-        block payloads through the exchange once per query containing it —
-        the right plan for small or low-overlap batches, where MaxScore
-        block skipping prunes most of the work per query. For LARGE
-        batches with Zipf-shaped term overlap (10^5 web queries over a
-        shared vocabulary), payload replication dominates: a term shared
-        by 300 queries ships its postings 300x. This path instead:
-
-          1. per-(query, term) multiplicity ``mult`` (duplicate query
-             tokens kept — reference semantics);
-          2. vocab-sized per-term values (variant idf via the same
-             math.log path as the scorer; BM25Plus unmatched baseline);
-          3. every matching block decoded ONCE in a (term, salt)
-             applyInPandas kernel -> narrow (term, doc_id, contrib) rows,
-             contrib = matched minus unmatched baseline so the final sum
-             is baseline-shifted exactly like the fan-out algebra;
-          4. contribs x query-term weights join (the only place work
-             scales with query count — rows are 24 bytes, not payloads),
-             partial-aggregated sum to (query_id, doc_id) scores;
-          5. per-query B_q baseline re-added, then the shared
-             padding + ranking tail (_pad_and_rank).
-
-        Trade-off: no per-query MaxScore pruning (every posting of every
-        batch term is scored once), so latency for a SINGLE query is
-        worse — throughput for overlapping batches is the win. Results
-        match search_df to float-summation order (parity-tested at
-        rel 1e-9; the reference accumulates per token, Spark's sum is
-        order-free)."""
-        import numpy as np
-
-        from similarities_spark import variants as _variants
-        from similarities_spark.index import codec as _codec
-
-        cfg = self.cfg
-        variant, delta = cfg.variant, cfg.resolved_delta()
-        avgdl, n_docs = self.index.avgdl, self.index.n_docs
-        k1, b = cfg.k1, cfg.b
-
-        tok_udf = make_tokenizer_udf("query")
-        qtok = queries_df.select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.explode(tok_udf(F.col("text"))).alias("term"),
-        )
-        qw = qtok.groupBy("query_id", "term").agg(
-            F.count(F.lit(1)).alias("mult")
-        )
-
-        # vocab-sized per-term values: variant idf (math.log, same C-libm
-        # path as the scorer) and the per-occurrence unmatched baseline
-        tstats = (
-            qw.select("term")
-            .distinct()
-            .join(self._stats_df, "term", "inner")
-        )
-
-        def tvals_fn(it):
-            f = (
-                _variants.idf_fn(variant, n_docs)
-                if variant != "okapi"
-                else None
-            )
-            for pdf in it:
-                if f is None:
-                    idf_v = pdf["idf"].to_numpy(dtype="float64")
-                else:
-                    idf_v = np.array(
-                        [f(int(d)) for d in pdf["df"]], dtype="float64"
-                    )
-                base = np.array(
-                    [
-                        _variants.unmatched_contrib(variant, iv, delta)
-                        for iv in idf_v
-                    ],
-                    dtype="float64",
-                )
-                yield pd.DataFrame(
-                    {"term": pdf["term"], "idf_v": idf_v, "base": base}
-                )
-
-        tvals = tstats.mapInPandas(
-            tvals_fn, "term string, idf_v double, base double"
-        ).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets)).cast("int"),
-        )
-
-        # each matching block exactly ONCE: broadcast the tiny term table
-        # into the bucket-partitioned blocks scan (runtime partition
-        # pruning on the broadcast join keys)
-        blocks = self._blocks_df.select(
-            "bucket", "term", "salt", "block_id", "n_postings", "payload"
-        )
-        tblocks = blocks.join(F.broadcast(tvals), ["bucket", "term"], "inner")
-
-        def contrib_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            term = pdf["term"].iloc[0]
-            idf_v = float(pdf["idf_v"].iloc[0])
-            base = float(pdf["base"].iloc[0])
-            ids_, tfs_, dls_ = _codec.decode_blocks_batch(
-                pdf["payload"].tolist(),
-                pdf["n_postings"].to_numpy(dtype="int64"),
-            )
-            c = _variants.matched_contribs(
-                variant, tfs_, dls_, idf_v, avgdl, k1, b, delta
-            )
-            return pd.DataFrame(
-                {"term": term, "doc_id": ids_, "contrib": c - base}
-            )
-
-        contribs = tblocks.groupBy("term", "salt").applyInPandas(
-            contrib_group, "term string, doc_id long, contrib double"
-        )
-
-        # the only stage whose row count scales with the query set — and
-        # the rows are narrow scalars, not payloads; partial (map-side)
-        # aggregation combines same-(query, doc) parts before the exchange
-        parts = contribs.join(qw, "term").select(
-            "query_id",
-            "doc_id",
-            (F.col("mult") * F.col("contrib")).alias("part"),
-        )
-        msum = parts.groupBy("query_id", "doc_id").agg(
-            F.sum("part").alias("mscore")
-        )
-        bq = (
-            qw.join(tvals.select("term", "base"), "term", "inner")
-            .groupBy("query_id")
-            .agg(F.sum(F.col("mult") * F.col("base")).alias("bq"))
-        )
-        scored_tc = msum.join(bq, "query_id", "left").select(
-            "query_id",
-            "doc_id",
-            (F.col("mscore") + F.coalesce(F.col("bq"), F.lit(0.0))).alias(
-                "score"
-            ),
-            F.coalesce(F.col("bq"), F.lit(0.0)).alias("pad_score"),
-        )
-
-        # truncate to per-query top-k BEFORE the padding tail: the rank
-        # filter compiles to WindowGroupLimit (partial per-partition limits
-        # ahead of the final sort), so the full matched set — every doc
-        # any query matched — never rides a global sort. Padding flags are
-        # then decidable from the TRUNCATED counts: truncated < topn iff
-        # matched < topn, and when padding engages the truncated count IS
-        # the exact matched count (pad-pool sizing only reads it then).
-        w_ord = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        wq = Window.partitionBy("query_id")
-        topk = scored_tc.withColumn(
-            "rank", F.row_number().over(w_ord)
-        ).filter(F.col("rank") <= topn)
-        scored = topk.select(
-            "query_id",
-            F.lit(0).cast("long").alias("range_id"),
-            "doc_id",
-            "score",
-            F.count(F.lit(1)).over(wq).cast("long").alias("n_matched"),
-            (F.count(F.lit(1)).over(wq) < F.lit(topn)).alias("needs_pad"),
-            "pad_score",
-        )
-        self.last_fan_out = None
-        hits = self._pad_and_rank(queries_df, scored, topn, single_range=True)
-        if include_text:
-            docs = self.index.docs().select(
-                "doc_id", F.col("text").alias("corpus_doc")
-            )
-            hits = hits.join(docs, "doc_id", "left").select(
-                "query_id", "rank", "doc_id", "score", "corpus_doc"
-            )
-        return hits
-
-    def _attach_token_dfs(
-        self, qtok: DataFrame, qstats: DataFrame, broadcast_stats: bool = True
-    ) -> DataFrame:
-        """Carry each in-index token's corpus df on the token side of the
-        cogroup (null for unknown terms). Only BM25Plus consumes it (the
-        scorer rebuilds per-token idf*delta baselines from it so doc-range
-        fan-out tasks stay exact even for tokens whose blocks live outside
-        their range); other variants skip the join and carry a null column
-        so the cogroup's left schema is stable across variants."""
-        if self.cfg.variant != "bm25plus":
-            return qtok.withColumn("df", F.lit(None).cast("long"))
-        # fresh Alias exprIds: qstats also feeds the blocks side of the
-        # cogroup, and re-using its `df` attribute on the token side trips
-        # Spark's ambiguous-self-join detection
-        stats = qstats.select(
-            F.col("query_id").alias("query_id"),
-            F.col("term").alias("term"),
-            F.col("df").alias("df"),
-        )
-        if broadcast_stats:
-            stats = F.broadcast(stats)
-        return qtok.join(stats, ["query_id", "term"], "left")
-
-    def _finish_search(
-        self,
-        qtok: DataFrame,
-        qblocks: DataFrame,
-        queries_df: DataFrame,
+        rows: DataFrame,
+        markers: DataFrame,
         topn: int,
         fan_out: Optional[int],
         include_text: bool,
+        tokens_by_q: Optional[Dict[int, list]] = None,
+        token_dfs_by_q: Optional[Dict[int, dict]] = None,
     ) -> DataFrame:
-        """Shared scoring tail: optional doc-range fan-out, cogrouped
-        MaxScore kernel, padding + ranking, optional text join."""
-        cfg = self.cfg
-        avgdl = self.index.avgdl
-        n_docs = self.index.n_docs
-        k1, b, k = cfg.k1, cfg.b, topn
-        prune = cfg.score_mode == "wand"
-        variant, delta = cfg.variant, cfg.resolved_delta()
+        """The one scoring tail: candidate block ``rows`` (query_id plus
+        _BLOCK_COLS) and one ``markers`` row per query -> ranked hits.
 
+        Under fan-out each block row is copied to every doc-id range it
+        overlaps and each marker to every range, so every (query, range)
+        gets a run — a range no block reaches still pads. Each range emits
+        its padded local top-k; one window merges them, which is exact
+        because a doc in the global top-k is in its own range's top-k."""
+        # observability (and test hook): the fan-out actually used
+        self.last_fan_out = fan_out
+        n_docs, k = self.index.n_docs, int(topn)
+        rows = rows.select("query_id", *_BLOCK_COLS)
         if fan_out:
             per = max(1, (n_docs + fan_out - 1) // fan_out)
-            ranges = self.spark.range(fan_out).select(
-                F.col("id").alias("range_id")
-            )
-            qtok = qtok.crossJoin(F.broadcast(ranges))
-            qblocks = qblocks.withColumn(
+            rows = rows.withColumn(
                 "range_id",
                 F.explode(
                     F.sequence(
@@ -751,50 +562,36 @@ class BM25QueryEngine:
                     )
                 ),
             )
+            ranges = self.spark.range(fan_out).select(
+                F.col("id").alias("range_id")
+            )
+            markers = markers.crossJoin(F.broadcast(ranges))
             keys = ["query_id", "range_id"]
         else:
             per = None
-            qtok = qtok.withColumn("range_id", F.lit(0).cast("long"))
-            qblocks = qblocks.withColumn("range_id", F.lit(0).cast("long"))
+            rows = rows.withColumn("range_id", F.lit(0).cast("long"))
+            markers = markers.withColumn("range_id", F.lit(0).cast("long"))
             keys = ["query_id"]
 
-        def score_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            src = left if len(left) else right
-            qid = int(src["query_id"].iloc[0])
-            rid = int(src["range_id"].iloc[0])
-            doc_range = (rid * per, (rid + 1) * per) if per else None
-            tokens = list(left.sort_values("pos")["term"])
-            token_dfs = {
-                t: int(d)
-                for t, d in zip(left["term"], left["df"])
-                if pd.notna(d)
-            }
-            ids, scores, n_matched, needs_pad, pad_score = _scorer.score_query(
-                tokens, right, k, avgdl, k1, b, prune=prune,
-                variant=variant, delta=delta, n_docs=n_docs,
-                doc_range=doc_range, token_dfs=token_dfs or None,
-            )
-            return pd.DataFrame(
-                {
-                    "query_id": qid,
-                    "range_id": rid,
-                    "doc_id": ids,
-                    "score": scores,
-                    "n_matched": n_matched,
-                    "needs_pad": needs_pad,
-                    "pad_score": pad_score,
-                }
-            )
-
-        scored = (
-            qtok.groupBy(*keys)
-            .cogroup(qblocks.groupBy(*keys))
-            .applyInPandas(score_group, _SCORE_SCHEMA)
+        kernel = _scoring_kernel(
+            k=k, n_docs=n_docs, avgdl=self.index.avgdl, cfg=self.cfg, per=per,
+            tokens_by_q=tokens_by_q, token_dfs_by_q=token_dfs_by_q or {},
         )
-
-        hits = self._pad_and_rank(
-            queries_df, scored, k, single_range=not fan_out
+        hits = (
+            rows.unionByName(markers, allowMissingColumns=True)
+            .repartition(*keys)
+            .sortWithinPartitions("query_id", "range_id")
+            .mapInArrow(kernel, _HITS_DDL)
         )
+        if fan_out:
+            w = Window.partitionBy("query_id").orderBy(
+                F.desc("score"), F.asc("doc_id")
+            )
+            hits = (
+                hits.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= k)
+                .select("query_id", "rank", "doc_id", "score")
+            )
         if include_text:
             docs = self.index.docs().select(
                 "doc_id", F.col("text").alias("corpus_doc")
@@ -803,107 +600,3 @@ class BM25QueryEngine:
                 "query_id", "rank", "doc_id", "score", "corpus_doc"
             )
         return hits
-
-    def _pad_and_rank(
-        self,
-        queries_df: DataFrame,
-        scored: DataFrame,
-        k: int,
-        single_range: bool = False,
-    ) -> DataFrame:
-        """Zero-score padding (reference ranks ALL docs; unmatched score 0.0,
-        ties by ascending doc_id) + final ranking. Padding work only runs for
-        flagged/zero-match queries — never on the happy path at scale.
-
-        Fully declarative over the query set: the padding set is a JOINED
-        DataFrame, never a driver-side literal, so batches of millions of
-        queries collect only ONE scalar row (flag count + max matched) —
-        needed to size the low-doc-id pad pool and pick the fast path."""
-        self.close()  # release the previous search's caches before persisting
-        scored = scored.persist()
-        self._live_cached.append(scored)
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-
-        # per-range flags first, then per-query: a query needs padding only
-        # if EVERY range flagged it (a single unflagged range proves k docs
-        # above the pad score exist globally); n_matched sums over ranges.
-        # A query id absent from `scored` entirely (no term matched any
-        # block) is zero-match: pad from score 0.0.
-        if single_range:
-            # no fan-out: flags/counters are constant across a query's rows
-            # (range_id is the literal 0), so the per-(query, range)
-            # de-duplicating DISTINCT shuffle is pure overhead — aggregate
-            # the constants directly (max == min == the value)
-            summary = scored.groupBy("query_id").agg(
-                F.max(F.col("needs_pad").cast("int")).alias("pad"),
-                F.max("n_matched").alias("n_matched"),
-                F.max("pad_score").alias("pad_score"),
-            )
-        else:
-            per_range = scored.select(
-                "query_id", "range_id", "n_matched", "needs_pad", "pad_score"
-            ).distinct()
-            summary = per_range.groupBy("query_id").agg(
-                F.min(F.col("needs_pad").cast("int")).alias("pad"),
-                F.sum("n_matched").alias("n_matched"),
-                F.max("pad_score").alias("pad_score"),
-            )
-        pad_q = (
-            queries_df.select(F.col("query_id").cast("long").alias("query_id"))
-            .distinct()
-            .join(summary, "query_id", "left")
-            .filter(F.col("pad").isNull() | (F.col("pad") == 1))
-            .select(
-                "query_id",
-                F.coalesce(F.col("pad_score"), F.lit(0.0)).alias("score"),
-                F.coalesce(F.col("n_matched"), F.lit(0)).alias("n_matched"),
-            )
-            .persist()
-        )
-        self._live_cached.append(pad_q)  # released with scored on next search
-        # the ONLY driver values: does any query need padding, and how many
-        # matched rows can a padded query already hold (sizes the pad pool)
-        g = pad_q.agg(
-            F.count(F.lit(1)).alias("n_pad"), F.max("n_matched").alias("mm")
-        ).collect()[0]
-        n_pad, max_matched = int(g["n_pad"]), int(g["mm"] or 0)
-
-        if n_pad == 0:
-            pad_q.unpersist()
-            self._live_cached.remove(pad_q)
-            return (
-                scored.select("query_id", "doc_id", "score")
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "rank", "doc_id", "score")
-            )
-
-        # doc ids are dense 0..N-1 by construction (_dense_doc_ids; merges
-        # append old_n..), so the lowest-id pad pool is a local range — no
-        # docs-table scan + sort + limit job per padded batch
-        low_docs = self.spark.range(
-            min(k + max_matched, self.index.n_docs)
-        ).select(F.col("id").alias("doc_id"))
-        zero_rows = (
-            pad_q.select("query_id", "score")
-            .crossJoin(F.broadcast(low_docs))
-            .join(
-                scored.select("query_id", "doc_id"),
-                ["query_id", "doc_id"],
-                "left_anti",
-            )
-        )
-        # ONE ranking window over matched rows (every query) plus the
-        # zero-score pool rows (padded queries only): per-query rankings
-        # are identical to ranking the padded and unpadded query sets
-        # separately, and the union saves an anti-join plus a second
-        # window exchange
-        return (
-            scored.select("query_id", "doc_id", "score")
-            .unionByName(zero_rows.select("query_id", "doc_id", "score"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score")
-        )

@@ -1,4 +1,5 @@
-"""Block-max top-k BM25 scoring kernel (numpy, runs inside applyInPandas).
+"""Block-max top-k BM25 scoring kernel (numpy, runs inside the engine's
+mapInArrow scoring tail).
 
 Strategy: block-max MaxScore, term-at-a-time (TAAT) — chosen over classic
 pointer-chasing DAAT WAND because it vectorizes: every inner step is a numpy
@@ -30,7 +31,7 @@ scores vs the reference's dense scan, reference rank_bm25.py:100-114):
    returned scores are bit-identical, not merely rank-identical.
 4. When fewer than k docs match (or the k-th score is <= 0), zero-score
    corpus docs are rankable in the reference; the scorer then emits ALL
-   candidates and flags the query for the engine's padding stage. Pruning
+   candidates and flags the query for the engine's in-kernel padding. Pruning
    cannot have fired in this case (pruning requires theta_safe > S >= 0).
 """
 

@@ -352,51 +352,3 @@ def test_auto_mode_small_batch_uses_fused_plan(spark, tmp_path):
         mode=cfg.resolved_postings_mode(10**6),
     )
     assert "tf" in rows_big.columns
-
-
-# ---------- term-centric batch scoring ----------
-
-
-def test_search_term_centric_df_matches_search_df(spark, tmp_path):
-    """Each (term, block) decoded once per batch must reproduce the
-    cogroup path exactly: same ranks/docs for every variant, scores to
-    float-summation order (the reference accumulates per token in order;
-    the term-centric sum is order-free)."""
-    import dataclasses
-
-    from similarities_spark.config import EngineConfig
-    from similarities_spark.query.engine import BM25QueryEngine
-    from similarities_spark.sources.synth import synth_webtext_pandas
-    from tests.test_r3_fixes import _build
-
-    df = spark.createDataFrame(synth_webtext_pandas(n_docs=120, seed=21))
-    idx = _build(
-        spark,
-        df,
-        tmp_path / "i",
-        EngineConfig(num_term_buckets=4, salt_df_threshold=30, num_salts=4),
-    )
-    qdf = spark.createDataFrame(
-        [
-            (0, "data web w0003"),     # multi-term, shared vocab
-            (1, "zzz unknown"),        # zero-match -> full zero padding
-            (2, "the of and the"),     # duplicate token (mult=2) + head terms
-            (3, "w0007"),              # sparse term -> partial padding
-        ],
-        "query_id long, text string",
-    )
-    for variant in ("okapi", "bm25l", "bm25plus"):
-        eng = BM25QueryEngine(
-            idx, cfg=dataclasses.replace(idx.config(), variant=variant)
-        )
-        a = sorted(
-            (r["query_id"], r["rank"], r["doc_id"], r["score"])
-            for r in eng.search_df(qdf, topn=7).collect()
-        )
-        t = sorted(
-            (r["query_id"], r["rank"], r["doc_id"], r["score"])
-            for r in eng.search_term_centric_df(qdf, topn=7).collect()
-        )
-        assert [x[:3] for x in a] == [x[:3] for x in t], variant
-        for x, y in zip(a, t):
-            assert y[3] == pytest.approx(x[3], rel=1e-9), (variant, x, y)

@@ -44,9 +44,9 @@ def test_literal_df_roundtrip_exotic_values(spark):
 
 
 def test_literal_df_large_fallback(spark):
-    from similarities_spark.localdf import _MAX_VALUES_ROWS
+    from similarities_spark.localdf import DRIVER_ROWS_MAX
 
-    rows = [(i, f"t{i}") for i in range(_MAX_VALUES_ROWS + 1)]
+    rows = [(i, f"t{i}") for i in range(DRIVER_ROWS_MAX + 1)]
     df = literal_df(spark, rows, "id long, s string")
     assert df.count() == len(rows)
 
